@@ -180,7 +180,9 @@ object Bench {
     // stdout line is the driver contract; the FILE is the loss-proof copy
     // (r6's driver tail-capture truncated the totals → "parsed": null)
     println(json)
-    val out = sys.env.getOrElse("GRAFT_BENCH_OUT", "bench_out.json")
+    // per-core-count default: an 8-core run must not overwrite the 4-core
+    // artifact of the same tree
+    val out = sys.env.getOrElse("GRAFT_BENCH_OUT", s"bench_out_c$cpus.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Throwable =>

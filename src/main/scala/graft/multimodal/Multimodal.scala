@@ -365,6 +365,15 @@ object Multimodal {
       .unionByName(hashed.where(col("graft_phash").isNull).drop("graft_phash"))
   }
 
+  /** Frame and window ids pack as `media_id * 2^20 + idx` in a Long; the
+    * product stays exact, and [[hashVotePairs]]' shift recovers the id,
+    * only while |media_id| < 2^43. Both fid producers fail the row loudly
+    * past it instead of letting the multiply wrap.
+    */
+  private def requireFidMediaId(mediaId: Long): Unit =
+    require(mediaId > -(1L << 43) && mediaId < (1L << 43),
+      s"media $mediaId: |media_id| exceeds the 2^43 fid budget")
+
   /** Per-frame perceptual hashes for VIDEO rows: the payload split into
     * `frameBytes`-sized frames (the stub decode contract — byte slices
     * stand in for decoded rasters; a real decoder would route each frame
@@ -388,6 +397,7 @@ object Multimodal {
         // loudly here instead
         require(nFrames < (1 << 20),
           s"media ${m.media_id}: $nFrames frames exceeds the 2^20 fid budget")
+        requireFidMediaId(m.media_id)
         (0 until nFrames).iterator.map { f =>
           val frame = java.util.Arrays.copyOfRange(content, f * frameBytes,
             math.min((f + 1) * frameBytes, content.length))
@@ -589,6 +599,7 @@ object Multimodal {
           else 1 + (len - windowBytes) / hopBytes
         require(nWins < (1 << 20),
           s"media ${m.media_id}: $nWins windows exceeds the 2^20 fid budget")
+        requireFidMediaId(m.media_id)
         (0 until nWins).iterator.map { w =>
           val frame = java.util.Arrays.copyOfRange(content, w * hopBytes,
             math.min(w * hopBytes + windowBytes, len))

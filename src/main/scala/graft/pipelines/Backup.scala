@@ -4,6 +4,8 @@ import graft.codec.{CompressionCodec, SegmentCodec}
 import graft.catalog._
 import graft.functions.KFunctions
 import graft.model.KRecord
+import graft.util.SerializableHadoopConf
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,22 +28,6 @@ case class BackupConfig(
     enrichHeaders: Boolean = true,
     includeTopics: Seq[String] = Nil,
     excludeTopics: Seq[String] = Nil)
-
-/** Java-serializable Hadoop Configuration carrier for task closures
-  * (Configuration itself is Writable but not java.io.Serializable).
-  */
-final class SerializableHadoopConf(@transient var value: org.apache.hadoop.conf.Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new org.apache.hadoop.conf.Configuration(false)
-    value.readFields(in)
-  }
-}
 
 /** The ingest pipeline (reference query lifecycle §3.1): source records →
   * header enrichment (F11) → per-(topic,partition) segment roll (K1/St4) →
@@ -81,10 +67,7 @@ object Backup {
       else filtered
 
     val cfg = config // avoid closing over `this`
-    // capture the driver's Hadoop conf (spark.hadoop.* — object-store
-    // credentials, endpoints) for the executors; a bare `new Configuration()`
-    // in the task would silently drop them
-    val hadoopConf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    val hadoopConf = SerializableHadoopConf.broadcast(spark)
     val written: Seq[SegmentRow] = enriched
       .repartition(col("topic"), col("partition"))
       .sortWithinPartitions("topic", "partition", "offset")
@@ -158,9 +141,9 @@ object Backup {
     * bound holds strictly for every segment.
     */
   private def writeTaskPartition(it: Iterator[KRecord], cfg: BackupConfig,
-                                 hadoopConf: SerializableHadoopConf): Iterator[SegmentRow] = {
+                                 hadoopConf: Broadcast[SerializableHadoopConf]): Iterator[SegmentRow] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(cfg.backupRoot), hadoopConf.value)
+      new java.net.URI(cfg.backupRoot), hadoopConf.value.value)
     val out = scala.collection.mutable.ArrayBuffer.empty[SegmentRow]
 
     var curTopic: String = null

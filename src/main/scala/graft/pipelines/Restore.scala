@@ -1,9 +1,10 @@
 package graft.pipelines
 
-import graft.catalog.{BackupManifest, Manifest}
-import graft.codec.{CompressionCodec, SegmentCodec}
-import graft.functions.KFunctions
+import graft.catalog.{BackupManifest, Manifest, SegmentMetadata}
+import graft.codec.{LegacySegment, SegmentCodec}
 import graft.model.KRecord
+import graft.util.SerializableHadoopConf
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,37 +25,36 @@ case class RestoreConfig(
     completedSegmentKeys: Set[String] = Set.empty)
 
 /** The restore "query" (reference lifecycle §3.2): manifest catalog → segment
-  * pruning (F6) → checkpoint anti-join (F9) → binary scan + KBAK decode
-  * (S8/S10) → record time filter (F7) → topic/partition remap (F13/F14).
+  * pruning (F6) → checkpoint anti-join (F9) → catalog-driven segment scan +
+  * KBAK decode (S8/S10) → record time filter (F7) → topic/partition remap
+  * (F13/F14).
   *
   * Scale shape: pruning happens on the CATALOG (one row per segment), so at
-  * 100 TB a narrow PITR window touches only the overlapping ~128 MB objects;
-  * the binaryFile scan parallelizes one file per task; decode is a streaming
-  * flatMap (no per-task materialization); the ts filter is re-applied
-  * per-record because segment stats are ranges, not predicates.
+  * 100 TB a narrow PITR window touches only the overlapping ~128 MB objects.
+  * The scan is built from the catalog too: the pruned keys, in catalog
+  * order, are cut into contiguous byte-balanced runs, one task each, and
+  * every task opens its objects by key and reads them whole — no file
+  * listing, no status call per object (the manifest already names every
+  * object). Decode is a streaming flatMap (no per-task materialization);
+  * the ts filter is re-applied per-record because segment stats are
+  * ranges, not predicates.
   */
 object Restore {
+
+  /** Scan tasks per core, at most: enough slack to even out segments of
+    * uneven size without paying task overhead per object.
+    */
+  private val SlicesPerCore = 3
+
+  /** Name prefix of the scan's source RDD (visible per stage in the UI). */
+  val ScanRddName = "restore segment scan"
 
   /** The restored record set as a canonical-record Dataset (the produce step
     * K3 is a separate sink; tests and validation consume this directly).
     */
   def records(spark: SparkSession, cfg: RestoreConfig): Dataset[KRecord] = {
-    import spark.implicits._
     val manifest = Manifest.load(cfg.backupRoot, cfg.backupId)
-    val keys = prunedSegmentKeys(manifest, cfg)
-    val root = cfg.backupRoot
-
-    val decoded: Dataset[KRecord] =
-      if (keys.isEmpty) spark.emptyDataset[KRecord]
-      else spark.read.format("binaryFile")
-        .load(keys.map(k => s"$root/$k"): _*)
-        .select("path", "content")
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, bytes) =>
-          val (topic, partition) = parseSegmentPath(path)
-          // magic-sniffed: KBAK binary or legacy JSON (S10/S11)
-          graft.codec.LegacySegment.decodeAny(bytes, path, topic, partition)
-        }
+    val decoded = segmentScan(spark, cfg.backupRoot, prunedSegments(manifest, cfg))
 
     val timeFiltered = (cfg.windowStartMs, cfg.windowEndMs) match {
       case (None, None) => decoded
@@ -64,6 +64,89 @@ object Restore {
         decoded.filter(r => r.timestamp >= lo && r.timestamp <= hi)
     }
     timeFiltered
+  }
+
+  /** Decode `segments` (catalog entries under `root`) into records. The list
+    * is sliced into at most `SlicesPerCore` × cores contiguous runs of
+    * similar `compressed_size`, never more runs than segments; the Hadoop
+    * conf travels as one broadcast. A missing or corrupt object fails its
+    * task with an error naming the segment key — never a silent drop.
+    */
+  private def segmentScan(spark: SparkSession, root: String,
+                          segments: Seq[SegmentMetadata]): Dataset[KRecord] = {
+    import spark.implicits._
+    if (segments.isEmpty) return spark.emptyDataset[KRecord]
+    val sc = spark.sparkContext
+    val segs = segments.toVector
+    val slices = contiguousRuns(segs.map(_.compressed_size),
+      SlicesPerCore * sc.defaultParallelism).map(r => segs.slice(r.start, r.end))
+    val conf = SerializableHadoopConf.broadcast(spark)
+    val source = sc.parallelize(slices, slices.size)
+      .setName(s"$ScanRddName: ${segs.size} segments")
+    spark.createDataset(source.flatMap { slice =>
+      val fs = FileSystem.get(new java.net.URI(root), conf.value.value)
+      slice.iterator.flatMap(s => decodeSegment(fs, root, s))
+    })
+  }
+
+  /** Cut `sizes` into at most `maxRuns` contiguous index ranges of roughly
+    * equal total size (each weighted at least 1, so empty entries still
+    * spread). Every run is non-empty; there are never more runs than sizes.
+    */
+  private[graft] def contiguousRuns(sizes: Seq[Long], maxRuns: Int): Seq[Range] = {
+    val n = math.max(1, math.min(maxRuns, sizes.size))
+    val target = (sizes.iterator.map(math.max(_, 1L)).sum + n - 1) / n
+    val runs = Vector.newBuilder[Range]
+    var start = 0
+    var acc = 0L
+    sizes.iterator.zipWithIndex.foreach { case (size, i) =>
+      acc += math.max(size, 1L)
+      // each closed run weighs >= ceil(total / n), so at most n close
+      if (acc >= target) { runs += (start until i + 1); start = i + 1; acc = 0L }
+    }
+    if (start < sizes.size) runs += (start until sizes.size)
+    runs.result()
+  }
+
+  /** Read one segment object whole and decode it (magic-sniffed: KBAK binary
+    * or legacy JSON, S10/S11); topic and partition come from the key. Any
+    * failure, eager or mid-iteration, is rethrown naming the key.
+    */
+  private def decodeSegment(fs: FileSystem, root: String,
+                            seg: SegmentMetadata): Iterator[KRecord] = {
+    val key = seg.key
+    def named[A](f: => A): A =
+      try f catch {
+        case e: Exception => throw new java.io.IOException(
+          s"restore: segment $key under $root: ${e.getMessage}", e)
+      }
+    val it = named {
+      val (topic, partition) = parseSegmentPath(key)
+      val bytes = readWhole(fs, new Path(s"$root/$key"),
+        SegmentCodec.HeaderSize + seg.compressed_size + SegmentCodec.FooterSize)
+      LegacySegment.decodeAny(bytes, key, topic, partition)
+    }
+    new Iterator[KRecord] {
+      def hasNext: Boolean = named(it.hasNext)
+      def next(): KRecord = named(it.next())
+    }
+  }
+
+  /** An object's whole content, read to EOF with no status call. The
+    * catalog's expected length sizes the first read, so a KBAK segment
+    * lands in one exact-length array with no copy.
+    */
+  private def readWhole(fs: FileSystem, path: Path, expected: Long): Array[Byte] = {
+    val in = fs.open(path)
+    try {
+      val head = new Array[Byte](math.max(0L, math.min(expected, Int.MaxValue - 8L)).toInt)
+      val n = in.readNBytes(head, 0, head.length)
+      if (n < head.length) java.util.Arrays.copyOf(head, n)
+      else {
+        val tail = in.readAllBytes()
+        if (tail.isEmpty) head else Array.concat(head, tail)
+      }
+    } finally in.close()
   }
 
   /** Restore with topic rename / explicit partition remap applied (F13/F14). */
@@ -86,7 +169,7 @@ object Restore {
     * → time-window segment pruning (F6) → completed-segment anti set (F9).
     * Driver-side list ops — the manifest is small (1 row per 128 MB object).
     */
-  def prunedSegmentKeys(manifest: BackupManifest, cfg: RestoreConfig): Seq[String] = {
+  def prunedSegments(manifest: BackupManifest, cfg: RestoreConfig): Seq[SegmentMetadata] =
     for {
       t <- manifest.topics
       if graft.functions.KHash.topicMatches(t.name, cfg.includeTopics, cfg.excludeTopics)
@@ -95,8 +178,11 @@ object Restore {
       s <- p.segments
       if s.overlapsTimeWindow(cfg.windowStartMs, cfg.windowEndMs)
       if !cfg.completedSegmentKeys.contains(s.key)
-    } yield s.key
-  }
+    } yield s
+
+  /** The keys of [[prunedSegments]], in catalog order. */
+  def prunedSegmentKeys(manifest: BackupManifest, cfg: RestoreConfig): Seq[String] =
+    prunedSegments(manifest, cfg).map(_.key)
 
   /** A5 restore-report metrics via `Dataset.observe` (restore/engine.rs
     * 346-357): record/byte counters accumulate during the ACTION that

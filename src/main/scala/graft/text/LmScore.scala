@@ -94,6 +94,13 @@ object LmScore {
       this
     }
 
+    /** Free the cached tables and, for a trained model, the backing
+      * `combCk` checkpoint. The model is unusable afterwards: uni/bi/tri
+      * are filters of that lineage-truncated checkpoint, so any later
+      * [[score]], [[save]] or read of the tables fails on missing
+      * checkpoint blocks instead of recomputing. Re-train or
+      * [[LmModel.load]] a saved copy to score again.
+      */
     def unpersist(): LmModel = {
       uni.unpersist(); bi.unpersist(); tri.unpersist()
       combCk.foreach(graft.util.Checkpoints.free)

@@ -95,8 +95,10 @@ object Validation {
 
   /** `validate --deep` (cli/commands/validate.rs:48-233): re-read and decode
     * every segment, verify CRC (decode throws on mismatch), and check record
-    * count + offset range equality against the manifest entry. Runs as the
-    * same distributed binary scan as restore, minus the produce.
+    * count + offset range equality against the manifest entry. Runs as a
+    * distributed binaryFile scan over the partition directories: unlike
+    * restore's catalog-driven scan, which fails on a missing object, deep
+    * validation must report one as a Failed row.
     */
   /** The only per-backup state `deep` materializes on the driver: one scan
     * root per (topic, partition) directory — never per segment. Exposed for
@@ -119,8 +121,7 @@ object Validation {
     // binaryFile then scans whole directories; a deleted object simply never
     // appears on the actual side and the left join turns it into a Failed row.
     val dirs = deepScanRoots(manifest)
-    val conf = new graft.pipelines.SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
+    val conf = graft.util.SerializableHadoopConf.broadcast(spark)
     val rootLocal = backupRoot
     // Dirs can vanish wholesale (a whole partition deleted): probe existence
     // distributed, keep only listable dirs as scan roots. O(dirs) driver-side.
@@ -128,7 +129,7 @@ object Validation {
       .parallelize(dirs, math.max(1, math.min(dirs.size, 64)))
       .filter { d =>
         val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(rootLocal), conf.value)
+          new java.net.URI(rootLocal), conf.value.value)
         try fs.listStatus(new org.apache.hadoop.fs.Path(s"$rootLocal/$d")).nonEmpty
         catch { case _: java.io.FileNotFoundException => false }
       }.collect()

@@ -235,4 +235,47 @@ class BackupRestoreSpec extends SparkSpec {
     assert(row("records_restored") == 1000L)
     assert(row("bytes_restored").asInstanceOf[Long] > 0L)
   }
+
+  test("PITR window edges: 50 seeded windows keep lo/hi, drop lo-1/hi+1, select a segment ending at lo") {
+    import spark.implicits._
+    // dense event time: every (topic, partition) holds one record per ms, so
+    // lo-1 and hi+1 always name real records; small segments put segment
+    // edges inside most windows
+    val perPartition = 400
+    val t0 = 1700000000000L
+    val src = for {
+      t <- Seq("ta", "tb"); p <- 0 until 3; o <- 0 until perPartition
+    } yield KRecord(t, p, o.toLong, t0 + 17L * p + o, null, Array[Byte](o.toByte), Nil)
+    val root = Files.createTempDirectory("graft-pitr-edges").toString
+    val m = Backup.run(spark, src.toDS().toDF(),
+      BackupConfig("edges", root, CompressionCodec.None, maxSegmentBytes = 1024,
+        enrichHeaders = false))
+    val allStamps = src.map(_.timestamp).toSet
+    val maxTs = allStamps.max
+    // segments whose end leaves room for a record on each side of a window
+    val edges = m.topics.flatMap(_.partitions).flatMap(_.segments)
+      .filter(s => s.end_timestamp > t0 && s.end_timestamp < maxTs)
+    assert(edges.size > 30)
+    val rnd = new scala.util.Random(5)
+    (1 to 50).foreach { i =>
+      // lo is some segment's end timestamp; hi lies up to 150 ms past it
+      val edge = edges(rnd.nextInt(edges.size))
+      val lo = edge.end_timestamp
+      val hi = math.min(lo + rnd.nextInt(150), maxTs - 1)
+      val cfg = RestoreConfig(root, "edges", Some(lo), Some(hi))
+      assert(Restore.prunedSegmentKeys(m, cfg).contains(edge.key),
+        s"window $i [$lo, $hi]: segment ${edge.key} ending at lo not selected")
+      val got = Restore.records(spark, cfg).map(r => (r.topic, r.partition, r.timestamp))
+        .collect().toSet
+      val want = src.filter(r => r.timestamp >= lo && r.timestamp <= hi)
+        .map(r => (r.topic, r.partition, r.timestamp)).toSet
+      assert(got == want, s"window $i [$lo, $hi]")
+      val stamps = got.map(_._3)
+      assert(stamps.contains(lo) && stamps.contains(hi), s"window $i [$lo, $hi]: edge dropped")
+      assert(!stamps.contains(lo - 1) && !stamps.contains(hi + 1),
+        s"window $i [$lo, $hi]: record outside the window kept")
+      // the outside neighbours exist, so the drop assertions are not vacuous
+      assert(allStamps.contains(lo - 1) && allStamps.contains(hi + 1), s"window $i [$lo, $hi]")
+    }
+  }
 }

@@ -244,6 +244,27 @@ class EdgeCaseSpec extends SparkSpec {
     assert(failed(0).getAs[String]("segment_key") == victim)
     assert(failed(0).getAs[String]("decode_error") == "object missing")
   }
+
+  test("fid packing: a media id at 2^43 fails both producers loudly, naming the id") {
+    import graft.multimodal.{MediaRecord, Multimodal}
+    val payload = Array.fill[Byte](2048)(7)
+    val ok = (1L << 43) - 1
+    assert(Multimodal.frameHashes(Seq(MediaRecord(ok, "video", payload, Map.empty)).toDS())
+      .count() > 0)
+    assert(Multimodal.audioFingerprints(Seq(MediaRecord(-ok, "audio", payload, Map.empty)).toDS())
+      .count() > 0)
+    val bad = 1L << 43
+    Seq(
+      () => Multimodal.frameHashes(Seq(MediaRecord(bad, "video", payload, Map.empty)).toDS()),
+      () => Multimodal.audioFingerprints(Seq(MediaRecord(bad, "audio", payload, Map.empty)).toDS()),
+      () => Multimodal.audioFingerprints(Seq(MediaRecord(-bad, "audio", payload, Map.empty)).toDS())
+    ).foreach { run =>
+      val ex = intercept[Exception](run().count())
+      val msgs = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).toList
+      assert(msgs.exists(m => m.contains(bad.toString) && m.contains("2^43")), msgs.mkString(" | "))
+    }
+  }
 }
 
 object KRecordFixtures {
